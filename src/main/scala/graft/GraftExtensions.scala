@@ -256,6 +256,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  private[graft] val WindowExecLogger =
+    "org.apache.spark.sql.execution.window.WindowExec"
+
   /** Silence WindowExec's blanket global-window warning once per JVM:
     * every unpartitioned window in this engine runs over a frame
     * bounded by construction (seed ranks over a `limit(n)`, top-V id
@@ -266,33 +269,37 @@ object GraftExtensions {
     * warning fires on every bounded window and buries real warnings in
     * the smoke tail. A plain level override would not survive
     * `sparkContext.setLogLevel` (it calls `Configurator.setAllLevels`,
-    * clobbering per-logger levels), so the suppression is a DENY
-    * filter on a dedicated WindowExec logger config — setAllLevels
-    * touches levels, never filters. Spark's own logging init
-    * RECONFIGURES the context after session setup (dropping
-    * programmatic logger configs), so the install is RE-CHECKED from a
-    * no-op resolution rule on every analysis pass — a map lookup when
-    * already installed. The engine-wide review rule stands: a global
-    * window over an UNBOUNDED frame is a bug regardless of this
-    * logger. */
+    * clobbering per-logger levels), so the suppression is a filter on a
+    * dedicated WindowExec logger config — setAllLevels touches levels,
+    * never filters. The filter matches that one message and DENIES it;
+    * every other WindowExec event stays NEUTRAL and logs as before.
+    * Spark's own logging init RECONFIGURES the context after session
+    * setup (dropping programmatic logger configs), so the install is
+    * RE-CHECKED from a no-op resolution rule on every analysis pass — a
+    * map lookup when already installed. The engine-wide review rule
+    * stands: a global window over an UNBOUNDED frame is a bug regardless
+    * of this logger. */
   private[graft] def quietBoundedWindowWarning(): Unit = {
     import org.apache.logging.log4j.Level
     import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.Filter.Result
     import org.apache.logging.log4j.core.LoggerContext
     import org.apache.logging.log4j.core.config.LoggerConfig
-    import org.apache.logging.log4j.core.filter.DenyAllFilter
-    val name = "org.apache.spark.sql.execution.window.WindowExec"
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    def noPartitionFilter = RegexFilter.createFilter(
+      "(?s).*No Partition Defined.*", null, false, Result.DENY,
+      Result.NEUTRAL)
     LogManager.getContext(false) match {
       case ctx: LoggerContext =>
         val cfg = ctx.getConfiguration
-        val existing = cfg.getLoggerConfig(name)
-        if (existing.getName != name) {
-          val fresh = new LoggerConfig(name, Level.WARN, true)
-          fresh.addFilter(DenyAllFilter.newBuilder().build())
-          cfg.addLogger(name, fresh)
+        val existing = cfg.getLoggerConfig(WindowExecLogger)
+        if (existing.getName != WindowExecLogger) {
+          val fresh = new LoggerConfig(WindowExecLogger, Level.WARN, true)
+          fresh.addFilter(noPartitionFilter)
+          cfg.addLogger(WindowExecLogger, fresh)
           ctx.updateLoggers()
         } else if (existing.getFilter == null) {
-          existing.addFilter(DenyAllFilter.newBuilder().build())
+          existing.addFilter(noPartitionFilter)
           ctx.updateLoggers()
         }
       case _ => // non-core logging backend: leave the warning be

@@ -61,8 +61,9 @@ object Pipeline {
     * over the verified pairs pick ONE representative (lowest doc_id)
     * per duplicate cluster, so a chain a-b-c keeps only a — where the
     * greedy drop could keep both a and c when (a,c) was never a
-    * candidate pair. Costs the extra O(log diameter) label-propagation
-    * rounds of [[graft.dedup.NearDup.components]]. */
+    * candidate pair. Costs one more collect of the verified edge set
+    * ([[graft.dedup.NearDup.components]] resolves it on the driver when
+    * it fits). */
   def curateNearDupExact(docs: DataFrame, minQuality: Double = 0.3,
       minJaccard: Double = 0.8): DataFrame = {
     val curated = curate(docs, minQuality).localCheckpoint()
@@ -91,7 +92,7 @@ object Pipeline {
     * carries a "graft.curate_full" observe metric (rows and tokens
     * kept) for per-run telemetry. Shuffle inventory: fingerprint agg,
     * percentile agg (tiny), LSH band agg + verification joins,
-    * component rounds over the (small) pair set, per-source window —
+    * components over the (small) pair set, per-source window —
     * every key uniform or per-source, nothing corpus-quadratic. */
   def curateFull(docs: DataFrame, minQuality: Double = 0.3,
       minJaccard: Double = 0.8, quotaScale: Double = 4.0,

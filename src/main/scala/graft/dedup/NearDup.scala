@@ -296,29 +296,60 @@ object NearDup {
     pairs
   }
 
-  /** Greedy keep-lowest near-dedup: drop every doc that is the higher
-    * id of a verified pair. (Greedy, not connected-components: in a
-    * chain a-b-c it keeps a and may keep c if (a,c) was no candidate —
-    * the standard single-pass approximation; exact grouping would need
-    * an iterative CC pass.) */
+  /** Symmetric edge rows (both orientations of every pair) up to which
+    * [[components]] resolves the graph on the driver. The driver then
+    * holds at most this many two-long rows plus one union-find entry
+    * per node — a few hundred bytes per row counting the collect's
+    * serialized and decoded copies, so a few hundred MB at the bound,
+    * well inside the smallest (2 GB) driver heap the engine runs with.
+    * A fixed constant, not a conf: it is a memory-safety bound, not a
+    * tuning knob, and any graph under it costs the driver less than a
+    * single distributed round would. Verified near-duplicate edge sets
+    * at bench scale sit far below it, as does, by its 48k-node count,
+    * the 100x component probe; the weak-perturbation 100x corpus (27M
+    * genuine pairs) sits far above and takes the distributed path. */
+  val DriverEdges: Int = 1000000
+
   /** Connected components over an undirected (doc_a, doc_b) edge set:
     * every node labeled with the minimum doc_id reachable from it.
     * Output: (doc_id, comp) for every node that appears in an edge.
     *
-    * Iterative min-label propagation with POINTER JUMPING (the standard
-    * Spark formulation when a full Pregel runtime is overkill): each
-    * round propagates labels across edges AND compresses each label to
-    * its label's label, so convergence takes O(log diameter) rounds —
-    * maxIter=20 covers diameters past 2^20, far beyond any real
-    * duplicate cluster. Each round is two joins + an aggregation on the
-    * (small) edge set, with `localCheckpoint` to truncate lineage.
-    * If the cap is somehow hit without convergence the call FAILS
-    * rather than returning silently-wrong labels (q48's oracle computes
-    * the exact closure, so an unconverged result would diverge).
+    * The symmetric edge set is checkpointed once — the one execution of
+    * the caller's candidate/verify subtree — and then resolved on one
+    * of two paths, which return the same schema and labels:
+    *
+    *  - driver: when the edge set has at most [[DriverEdges]] rows
+    *    (checked by collecting at most `DriverEdges + 1` of them), a
+    *    path-compressed union-find that links every root under the
+    *    smaller one computes the min-id labels in one pass, and they
+    *    return as a local relation, so downstream joins broadcast them
+    *    from driver memory. Cost: the checkpoint plus one collect,
+    *    whatever the graph's diameter.
+    *  - distributed: larger edge sets (also non-integral ids or a null
+    *    endpoint) run iterative min-label propagation with POINTER
+    *    JUMPING (the standard Spark formulation when a full Pregel
+    *    runtime is overkill): each round propagates labels across edges
+    *    AND compresses each label to its label's label, so convergence
+    *    takes O(log diameter) rounds — maxIter=20 covers diameters past
+    *    2^20, far beyond any real duplicate cluster. Each round is two
+    *    joins + an aggregation, with `localCheckpoint` to truncate
+    *    lineage. If the cap is hit without convergence the call FAILS
+    *    rather than returning silently-wrong labels (q48's oracle
+    *    computes the exact closure, so an unconverged result would
+    *    diverge). This path stays because it is the only one that runs
+    *    on edge sets that do not fit on the driver.
+    *
     * The exact alternative to [[dropNearDuplicates]]'s greedy pass:
     * a chain a-b-c groups all three even though (a,c) was never a
     * candidate pair. */
-  def components(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def components(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    componentsBounded(pairs, maxIter, DriverEdges)
+
+  /** [[components]] with the driver-path bound as an argument; a
+    * negative `driverEdges` skips the driver path, so specs can run the
+    * distributed path on small graphs. */
+  private[graft] def componentsBounded(pairs: DataFrame, maxIter: Int,
+      driverEdges: Int): DataFrame = {
     // maxIter=0 would fall through the loop and return per-node
     // self-labels — wrong for ANY nonempty edge set — so reject it up
     // front; the fail-fast contract below must hold for every argument
@@ -338,6 +369,61 @@ object NearDup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .localCheckpoint()
+    resolveOnDriver(edges, driverEdges)
+      .getOrElse(pointerJumping(edges, maxIter))
+  }
+
+  /** The driver path of [[components]]: `None` when the symmetric edge
+    * set has more than `driverEdges` rows, non-integral ids or a null
+    * endpoint — the distributed path keeps its semantics for those. */
+  private def resolveOnDriver(edges: DataFrame,
+      driverEdges: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    val idType = edges.schema("src").dataType
+    val integral = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (driverEdges < 0 || !integral) return None
+    val rows = edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .limit(driverEdges + 1).collect()
+    if (rows.length > driverEdges ||
+        rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    // each root is linked under the smaller one, so a root is its
+    // component's minimum id
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var a = x
+      while (a != root) { val next = parent(a); parent(a) = root; a = next }
+      root
+    }
+    rows.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val labels = parent.keys.toSeq.map(x =>
+      org.apache.spark.sql.Row(x, find(x)))
+    // same schema as the distributed path: the id type, nullable
+    val schema = StructType(Seq("doc_id", "comp").map(
+      StructField(_, LongType, nullable = true)))
+    // a local list -> LocalRelation (IvfPq.probeFrom's pattern): joins
+    // on the labels broadcast with no staging job, and the cast back to
+    // the id type folds into the relation
+    Some(edges.sparkSession
+      .createDataFrame(java.util.Arrays.asList(labels: _*), schema)
+      .select(col("doc_id").cast(idType).as("doc_id"),
+        col("comp").cast(idType).as("comp")))
+  }
+
+  /** The distributed path of [[components]]: pointer-jumping rounds
+    * over the checkpointed symmetric edge set. */
+  private def pointerJumping(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("comp", col("doc_id"))
       .localCheckpoint()
@@ -389,6 +475,11 @@ object NearDup {
     labels
   }
 
+  /** Greedy keep-lowest near-dedup: drop every doc that is the higher
+    * id of a verified pair. (Greedy, not connected-components: in a
+    * chain a-b-c it keeps a and may keep c if (a,c) was no candidate —
+    * the standard single-pass approximation; [[components]] is the
+    * exact grouping.) */
   def dropNearDuplicates(docs: DataFrame, minJaccard: Double,
       maxBucket: Int = MaxBucket): DataFrame = {
     val (kept, report) =

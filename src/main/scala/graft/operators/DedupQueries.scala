@@ -399,9 +399,10 @@ object DedupQueries {
     // ---- connected components over verified near-dup pairs: the
     //      EXACT grouping alternative to the greedy drop (a chain a-b-c
     //      becomes one component even though (a,c) was never a
-    //      candidate). Spark side is iterative min-label propagation
-    //      ([[graft.dedup.NearDup.components]]); the oracle computes the
-    //      same fixpoint as a recursive transitive-closure CTE. ----
+    //      candidate). Spark side is [[graft.dedup.NearDup.components]]
+    //      (driver union-find, or pointer jumping past its bound); the
+    //      oracle computes the same fixpoint as a recursive
+    //      transitive-closure CTE. ----
     GraftQuery("q48_near_dup_components",
       s"""WITH RECURSIVE ${componentsCteSql()}
          |SELECT doc_id, comp FROM comp

@@ -3090,8 +3090,8 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
     * TB common case costs what readSince costs; consumed, rewritten
     * and dv-changed dirs diff multiset-wise (pre = the removed/
     * dv-superseded dirs read at `v-1` signed +1, post = their rewrite
-    * outputs at `v` signed -1, ONE `sum(_sign)` aggregation over all
-    * steps — semantically the per-step EXCEPT ALL pair, planned as a
+    * outputs at `v` signed -1, ONE `sum(_graft_sign)` aggregation over
+    * all steps — semantically the per-step EXCEPT ALL pair, planned as a
     * single exchange that scans each step's dirs once), so the diff
     * cost scales with the dirs a commit actually TOUCHED, never the
     * table. Every intermediate version
@@ -3122,6 +3122,14 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
       s"ManifestTable.readChanges: no schema sidecar at $path " +
         s"${vName(untilVersion)} — pre-sidecar tables have no change " +
         "feed"))
+    // staging columns of the signed diff below: reserved, like merge's
+    // _graft_src — a real column of the same name would be overwritten
+    val signCol = "_graft_sign"
+    val diffCol = "_graft_d"
+    Seq(signCol, diffCol).foreach(rc =>
+      require(!schema.fieldNames.contains(rc),
+        s"ManifestTable.readChanges: column name '$rc' is reserved for " +
+          "change-feed staging — rename the column"))
     // rows conform to the UNTIL schema: a column is located in the
     // step's frame BY FIELD ID first (so a rename mid-range maps old
     // rows onto the new name instead of nulling them), by name
@@ -3156,7 +3164,7 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
     var frames = Seq.empty[DataFrame]
     // Signed pre(+1)/post(-1) reads of the dirs each step touched,
     // version-tagged: ONE aggregation at the end computes every
-    // step's delete/insert diff — `sum(_sign)` grouped by (row,
+    // step's delete/insert diff — `sum(_graft_sign)` grouped by (row,
     // version) is exactly the EXCEPT ALL pair this replaced
     // (delete multiplicity = max(d, 0), insert = max(-d, 0); rows
     // present on both sides with equal counts cancel), but each
@@ -3197,9 +3205,9 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
           removed ++ dvPrev), v - 1)
         val post = norm(readDirs(spark, path, v, eNow,
           rewriteOut ++ dvNow), v)
-        signed :+= pre.withColumn("_sign", lit(1L))
+        signed :+= pre.withColumn(signCol, lit(1L))
           .withColumn("_commit_version", lit(v))
-        signed :+= post.withColumn("_sign", lit(-1L))
+        signed :+= post.withColumn(signCol, lit(-1L))
           .withColumn("_commit_version", lit(v))
       }
       if (fresh.nonEmpty)
@@ -3215,7 +3223,7 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
       // work stays O(changed rows). The rate-limited stream source
       // caps versions per micro-batch and never gets here. The
       // signed buffer collapses BEFORE its aggregation, so the
-      // checkpointed rows still carry (_sign, _commit_version) and
+      // checkpointed rows still carry (_graft_sign, _commit_version) and
       // the final diff is unchanged.
       if (frames.length >= ChangeUnionWidth)
         frames = Seq(frames.reduce(_ unionByName _).localCheckpoint())
@@ -3233,10 +3241,10 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
           schema.fields.map(f => col(f.name)).toSeq :+
             col("_commit_version")
         val d = u.groupBy(keys: _*)
-          .agg(sum(col("_sign")).as("_d"))
-          .filter(col("_d") =!= 0L)
+          .agg(sum(col(signCol)).as(diffCol))
+          .filter(col(diffCol) =!= 0L)
           .withColumn("_change_type",
-            when(col("_d") > 0, lit("delete")).otherwise(lit("insert")))
+            when(col(diffCol) > 0, lit("delete")).otherwise(lit("insert")))
         val outNames = schema.fields.map(_.name).toSeq ++
           Seq("_change_type", "_commit_version")
         // |d| copies per surviving (row, version) — the same
@@ -3245,7 +3253,7 @@ object ManifestTable extends ManifestStagingOps with ManifestDmlOps {
         // materializing an array
         val gen = org.apache.spark.sql.GraftSqlBridge.column(
           org.apache.spark.sql.catalyst.expressions.ReplicateRows(
-            (abs(col("_d")) +: outNames.map(col)).map(
+            (abs(col(diffCol)) +: outNames.map(col)).map(
               org.apache.spark.sql.GraftSqlBridge.expression)))
         Seq(d.select(gen.as(outNames)))
       }

@@ -46,4 +46,25 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(base)
     }
   }
+
+  test("the WindowExec log filter drops only the No Partition Defined warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.impl.Log4jLogEvent
+    import org.apache.logging.log4j.message.SimpleMessage
+    TestSpark.spark // the session's extensions install the filter
+    GraftExtensions.quietBoundedWindowWarning()
+    val name = GraftExtensions.WindowExecLogger
+    val cfg = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getLoggerConfig(name)
+    assert(cfg.getName == name)
+    def filtered(msg: String): Boolean = cfg.isFiltered(
+      Log4jLogEvent.newBuilder().setLoggerName(name).setLevel(Level.WARN)
+        .setMessage(new SimpleMessage(msg)).build())
+    assert(filtered("No Partition Defined for Window operation! Moving " +
+      "all data to a single partition, this can cause serious " +
+      "performance degradation."))
+    assert(!filtered("Some other WindowExec warning"))
+    assert(!filtered("spilled 12 MB of window buffer to disk"))
+  }
 }

@@ -49,6 +49,31 @@ class ManifestChangesSpec extends AnyFunSuite {
       (2L, 99L, "delete", 5L), (7L, 1L, "insert", 5L)))
   }
 
+  test("readChanges keeps user columns named _sign and _d intact") {
+    val t = s"${Files.createTempDirectory("graft-cdfs")}/t"
+    ManifestTable.append(spark,
+      Seq((1L, 5L, 7L), (2L, -3L, 0L)).toDF("id", "_sign", "_d"), t,
+      statsCols = Seq("id"))                                      // v1
+    ManifestTable.updateRange(spark, t, "id", 2L, 2L,
+      Seq("_d" -> lit(9L)))                                       // v2
+    ManifestTable.deleteRange(spark, t, "id", 1L, 1L)             // v3
+    val got = ManifestTable.readChanges(spark, t, 0L, 3L)
+      .select("id", "_sign", "_d", "_change_type", "_commit_version")
+      .as[(Long, Long, Long, String, Long)].collect().sorted.toSeq
+    assert(got == Seq(
+      (1L, 5L, 7L, "delete", 3L), (1L, 5L, 7L, "insert", 1L),
+      (2L, -3L, 0L, "delete", 2L), (2L, -3L, 0L, "insert", 1L),
+      (2L, -3L, 9L, "insert", 2L)))
+    // the staging names themselves are reserved, loudly
+    val r = s"${Files.createTempDirectory("graft-cdfr")}/t"
+    ManifestTable.append(spark,
+      Seq((1L, 1L)).toDF("id", "_graft_sign"), r)
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.readChanges(spark, r, 0L, 1L)
+    }
+    assert(e.getMessage.contains("reserved"))
+  }
+
   test("readChanges: maintenance is invisible; deleteKeys and dropPartitions feed") {
     val t = s"${Files.createTempDirectory("graft-cdfm")}/t"
     ManifestTable.append(spark,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.NearDup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucket into an O(n²) pair enumeration in a single task. */
 class NearDupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** The two resolution paths of [[NearDup.components]], each with the
+    * bound that selects it; every components case runs on both. */
+  private val componentPaths =
+    Seq("driver" -> NearDup.DriverEdges, "distributed" -> -1)
 
   private def corpus(rows: Seq[(Long, String)]) = {
     import spark.implicits._
@@ -51,9 +57,12 @@ class NearDupSpec extends AnyFunSuite {
     // Chain 1-2, 2-3 plus a separate pair 7-8: components must label
     // {1,2,3} with 1 even though (1,3) was never a pair.
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
-    val got = NearDup.components(pairs)
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    componentPaths.foreach { case (path, bound) =>
+      val got = NearDup.componentsBounded(pairs, 20, bound)
+        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
+      assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L),
+        s"$path path")
+    }
   }
 
   test("components converges on a long path within the iteration cap") {
@@ -61,9 +70,64 @@ class NearDupSpec extends AnyFunSuite {
     // A path 0-1-2-...-9 has diameter 9; min-label propagation moves
     // the min one hop per round, so this exercises real iteration.
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = NearDup.components(pairs)
-      .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    assert(got === (0L to 9L).map(_ -> 0L))
+    componentPaths.foreach { case (path, bound) =>
+      val got = NearDup.componentsBounded(pairs, 20, bound)
+        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
+      assert(got === (0L to 9L).map(_ -> 0L), s"$path path")
+    }
+  }
+
+  test("components returns the same schema on both paths") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val ints = Seq((1, 2), (5, 4)).toDF("doc_a", "doc_b")
+    Seq(pairs, empty, ints).foreach { in =>
+      val Seq(driver, distributed) =
+        componentPaths.map { case (_, bound) =>
+          NearDup.componentsBounded(in, 20, bound) }
+      assert(driver.schema === distributed.schema)
+      assert(driver.columns.toSeq === Seq("doc_id", "comp"))
+      assert(driver.collect().toSet === distributed.collect().toSet)
+    }
+  }
+
+  test("components on the driver path starts no per-round jobs") {
+    import spark.implicits._
+    // already-materialized edge frames, so the count is components'
+    // own jobs: a diameter-9 path needs more pointer-jumping rounds
+    // than a single pair, which the driver path must not pay for
+    val pair = Seq((1L, 2L)).toDF("doc_a", "doc_b").localCheckpoint()
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      .localCheckpoint()
+    val sc = spark.sparkContext
+    def jobsOf(pairs: DataFrame, bound: Int): Int = {
+      val group = s"neardup-jobs-${java.util.UUID.randomUUID()}"
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+            started.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "components job count")
+      try NearDup.componentsBounded(pairs, 20, bound)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+      started.get
+    }
+    val driverPair = jobsOf(pair, NearDup.DriverEdges)
+    val driverPath = jobsOf(path, NearDup.DriverEdges)
+    assert(driverPair === driverPath,
+      s"driver path: pair $driverPair jobs, 10-node path $driverPath")
+    // the distributed path does pay per round, so the spec can tell
+    // the two apart
+    assert(jobsOf(path, -1) > driverPath)
   }
 
   test("greedy drop collapses an all-duplicate corpus to its lowest id") {
@@ -140,14 +204,19 @@ class NearDupSpec extends AnyFunSuite {
   test("components of an empty pair set returns empty labels") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(NearDup.components(empty).count() === 0L)
+    componentPaths.foreach { case (path, bound) =>
+      assert(NearDup.componentsBounded(empty, 20, bound).count() === 0L,
+        s"$path path")
+    }
   }
 
   test("components rejects maxIter < 1 instead of returning self-labels") {
     import spark.implicits._
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    intercept[IllegalArgumentException] {
-      NearDup.components(pairs, maxIter = 0)
+    componentPaths.foreach { case (_, bound) =>
+      intercept[IllegalArgumentException] {
+        NearDup.componentsBounded(pairs, 0, bound)
+      }
     }
   }
 

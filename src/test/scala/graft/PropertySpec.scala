@@ -540,8 +540,6 @@ class PropertySpec extends AnyFunSuite {
       b <- Gen.chooseNum(0L, 39L) if a != b
     } yield (math.min(a, b), math.max(a, b))
     val edges = samples(edgeGen, 60).distinct
-    val got = graft.dedup.NearDup.components(edges.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // reference union-find
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -554,7 +552,13 @@ class PropertySpec extends AnyFunSuite {
     }
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val expect = nodes.map(n => n -> find(n)).toMap
-    assert(got === expect)
+    // both resolution paths: driver union-find and pointer jumping
+    Seq(graft.dedup.NearDup.DriverEdges, -1).foreach { bound =>
+      val got = graft.dedup.NearDup
+        .componentsBounded(edges.toDF("doc_a", "doc_b"), 20, bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === expect, s"driverEdges = $bound")
+    }
   }
 
   test("zorder_value: random inputs decode to per-axis cells; Long-wide spans don't wrap") {
